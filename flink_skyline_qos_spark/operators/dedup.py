@@ -401,9 +401,9 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     sizes = banded.groupBy("band", "bucket").agg(F.count("*").alias("n"))
     dropped = _dropped_bucket_stats(sizes, max_bucket)
     bad = sizes.filter(F.col("n") > max_bucket).select("band", "bucket")
-    banded = banded.join(F.broadcast(bad), ["band", "bucket"], "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
+    ok = banded.join(F.broadcast(bad), ["band", "bucket"], "left_anti")
+    a = ok.alias("a")
+    b = ok.alias("b")
     pairs = (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.bucket") == F.col("b.bucket"))
