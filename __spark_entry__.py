@@ -30,8 +30,6 @@ from flink_skyline_qos_spark import (  # noqa: E402
     skyline_two_phase,
 )
 from flink_skyline_qos_spark.operators.caching import (  # noqa: E402
-    pinned_local_checkpoint,
-    release_checkpoints_on_gc,
     release_on_gc,
 )
 from flink_skyline_qos_spark.operators.skyline import (  # noqa: E402
@@ -995,12 +993,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # a DuckDB recursive CTE over the same pair SQL — full value check
     # of the connected-components operator.
     def _dedup_clusters_docs(s: SparkSession, d: str) -> DataFrame:
-        out = dedup_clusters(
+        return dedup_clusters(
             load_table(s, d, "documents"),
             ngram_jaccard_pairs(load_table(s, d, "documents"), k=3,
                                 unit="word", threshold=0.05),
         )
-        return release_checkpoints_on_gc(out, out)
     q["dedup_clusters_documents"] = _dedup_clusters_docs
 
     # --- the full dedup pipeline as ONE query: MinHash-LSH candidate
@@ -1011,10 +1008,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = minhash_lsh_pairs(docs, num_hashes=64, bands=16,
                                   shingle_k=5, threshold=0.5)
         labeled = dedup_clusters(docs, pairs)
-        out = (docs.join(labeled, "doc_id")
-               .filter(F.col("is_canonical"))
-               .select("doc_id", "cluster_id"))
-        return release_checkpoints_on_gc(out, labeled)
+        return (docs.join(labeled, "doc_id")
+                .filter(F.col("is_canonical"))
+                .select("doc_id", "cluster_id"))
     q["dedup_corpus_documents"] = _dedup_corpus
 
     # --- the exact-substring twin of the pipeline above (round 11):
@@ -1025,10 +1021,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = load_table(s, d, "documents")
         pairs = substring_dedup_pairs(docs, k=8, min_span=12, max_df=50)
         labeled = dedup_clusters(docs, pairs)
-        out = (docs.join(labeled, "doc_id")
-               .filter(F.col("is_canonical"))
-               .select("doc_id", "cluster_id"))
-        return release_checkpoints_on_gc(out, labeled)
+        return (docs.join(labeled, "doc_id")
+                .filter(F.col("is_canonical"))
+                .select("doc_id", "cluster_id"))
     q["substring_dedup_corpus_documents"] = _substring_dedup_corpus
 
     # --- text analysis over documents ---
@@ -1212,9 +1207,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the redact-then-rejoin form was a needless shuffle
         out = redact_text(canon, keep=["lang"]) \
             .select("doc_id", "lang", "redacted")
-        return release_checkpoints_on_gc(
-            hash_split(out, {"train": 0.9, "val": 0.05, "test": 0.05},
-                       ["doc_id"]), labeled)
+        return hash_split(out, {"train": 0.9, "val": 0.05, "test": 0.05},
+                          ["doc_id"])
     q["llm_corpus_documents"] = _llm_corpus
 
     # --- capstone v2: the NEXT stage of the same pipeline — after the
@@ -1241,11 +1235,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # broadcast re-build measured ~0.7-3 s PER ACTION at sf0.01
         # even fully cached), and v2 takes five actions after this
         # point; truncating the lineage here flattens them (VERDICT
-        # r10 #4 — v2 was the 8.0 s slowest-gate-row).  Released on
-        # result GC with the other checkpoints.
-        canon = pinned_local_checkpoint(qual.join(
+        # r10 #4 — v2 was the 8.0 s slowest-gate-row).  Spark frees
+        # it once no derived plan reads it.
+        canon = qual.join(
             labeled.filter(F.col("is_canonical")).select("doc_id"),
-            "doc_id"))
+            "doc_id").localCheckpoint()
         bench = docs.filter((F.col("doc_id") % 10) == 7)
         contam = contamination_check(canon, bench, n=3)
         clean = canon.join(
@@ -1255,17 +1249,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # chunk→pack tail: pack scans its input three times (bounds,
         # bucket totals, final join) and each scan otherwise re-plans
         # the entire upstream pipeline (measured ~4 s of the r6 cost
-        # outlier); blocks released with the checkpoints below
-        red = pinned_local_checkpoint(
-            redact_text(clean).select(
-                "doc_id", F.col("redacted").alias("text")))
+        # outlier)
+        red = redact_text(clean).select(
+            "doc_id", F.col("redacted").alias("text")).localCheckpoint()
         chunks = chunk_documents(red, size=32, stride=32).persist()
-        return release_checkpoints_on_gc(
-            release_on_gc(
-                pack_sequences(chunks, seq_len=64).select(
-                    "doc_id", "chunk_idx", "chunk_text", "n_tokens",
-                    "start_offset", "seq_id", "seq_offset"),
-                chunks), labeled, red, canon)
+        return release_on_gc(
+            pack_sequences(chunks, seq_len=64).select(
+                "doc_id", "chunk_idx", "chunk_text", "n_tokens",
+                "start_offset", "seq_id", "seq_offset"),
+            chunks)
     q["llm_corpus_v2_documents"] = _llm_corpus_v2
 
     # --- capstone v3: the round-7 cleaning suite composed end-to-end —
@@ -1304,8 +1296,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # its input 2-3× (cutoff aggregate + filter, cap window, mix
         # aggregate) and each scan would otherwise re-derive the entire
         # v3 DAG — dedup, winnowing and all (45 s vs 9 s at sf0.01)
-        base = pinned_local_checkpoint(train.join(
-            docs.select("doc_id", "lang", "source"), "doc_id"))
+        base = train.join(docs.select("doc_id", "lang", "source"),
+                          "doc_id").localCheckpoint()
         scored = base.withColumn(
             "score", quality_score(F.col("clean_text")))
         floored = quality_floor(scored, "score", group_col="lang", q=0.25)
@@ -1316,9 +1308,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "doc_id", "lang",
             token_count(F.col("clean_text")).alias("n_tokens"))
         mixed = budget_mix(toks, ["lang"], 3000, "n_tokens", ["doc_id"])
-        return release_checkpoints_on_gc(
-            shard_manifest(mixed.select("doc_id", "n_tokens"),
-                           budget=2048), base)
+        return shard_manifest(mixed.select("doc_id", "n_tokens"),
+                              budget=2048)
     q["llm_corpus_v4_documents"] = _llm_corpus_v4
 
     # --- capstone v5 (round 12): the ExactSubstr-family pipeline end
@@ -1338,19 +1329,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus input ~4x (shingles, affected semi-join, rebuild,
         # final restore join) and each scan would re-derive the whole
         # gate+removal DAG (the v4 lesson: persist() != cheap actions)
-        r1 = pinned_local_checkpoint(
-            substring_remove(kept, k=8, min_span=12, max_df=50))
+        r1 = substring_remove(kept, k=8, min_span=12,
+                              max_df=50).localCheckpoint()
         r2 = substring_scrub(
             r1.select("doc_id", F.col("clean_text").alias("text")),
             bench, k=8, min_span=12, max_df=50)
-        out = (r1.select("doc_id",
-                         F.col("n_tokens").alias("n_tokens_kept"),
-                         F.col("n_removed").alias("n_dup_removed"))
-               .join(r2.select("doc_id", "clean_text",
-                               F.col("n_removed")
-                               .alias("n_contam_removed")),
-                     "doc_id"))
-        return release_checkpoints_on_gc(out, r1)
+        return (r1.select("doc_id",
+                          F.col("n_tokens").alias("n_tokens_kept"),
+                          F.col("n_removed").alias("n_dup_removed"))
+                .join(r2.select("doc_id", "clean_text",
+                                F.col("n_removed")
+                                .alias("n_contam_removed")),
+                      "doc_id"))
     q["llm_corpus_v5_documents"] = _llm_corpus_v5
 
     # --- deterministic sampling / splitting (content-stable md5
@@ -1370,10 +1360,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         labeled = dedup_clusters(
             docs, ngram_jaccard_pairs(docs, k=3, unit="word",
                                       threshold=0.05))
-        out = hash_split(labeled.select("doc_id", "cluster_id"),
-                         {"train": 0.8, "val": 0.1, "test": 0.1},
-                         ["cluster_id"])
-        return release_checkpoints_on_gc(out, labeled)
+        return hash_split(labeled.select("doc_id", "cluster_id"),
+                          {"train": 0.8, "val": 0.1, "test": 0.1},
+                          ["cluster_id"])
     q["cluster_split_documents"] = _cluster_split
     # per-source frequency cap (C4/FineWeb-style "at most K docs per
     # domain"): exact salted two-level top-K by content hash — no
@@ -2015,9 +2004,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             emb, threshold=0.35, n_planes=32, bands=8)
         labeled = dedup_clusters(
             emb, pairs.select("id_a", "id_b"), id_col="vec_id")
-        return release_checkpoints_on_gc(
-            labeled.filter(F.col("is_canonical"))
-            .select("vec_id", "cluster_id"), labeled)
+        return (labeled.filter(F.col("is_canonical"))
+                .select("vec_id", "cluster_id"))
     q["embedding_dedup_corpus"] = _embedding_dedup
 
     # --- distributed k-means over embeddings (cluster-based curation:
@@ -2050,10 +2038,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             emb, pairs.select("id_a", "id_b"), id_col="vec_id")
         canon = labeled.filter(F.col("is_canonical")).select("vec_id")
         kept = emb.join(canon, on="vec_id")
-        return release_checkpoints_on_gc(
-            kmeans_balanced_sample(
-                kept, dim=64, k=8, iterations=2, dp=4, target=20),
-            labeled)
+        return kmeans_balanced_sample(
+            kept, dim=64, k=8, iterations=2, dp=4, target=20)
     q["curation_capstone_embeddings"] = _curation_capstone
 
     # --- product quantization: per-subspace exact-integer codebooks,

@@ -16,6 +16,8 @@ import os
 import sys
 import time
 
+from pyspark import SparkContext
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -314,6 +316,11 @@ def sample_pinned(name: str, pts, run, max_samples: int,
             disp = getattr(res, "_verify_strategy", None)
             del res
             gc.collect()  # release operator-internal persists only
+            # ...and let Spark's ContextCleaner free this run's
+            # localCheckpoint pins before the next run starts
+            sc = SparkContext._active_spark_context
+            if sc is not None:
+                sc._jvm.System.gc()
             if len(runs) >= 2 and converged(name, runs, steady,
                                             floor_exited):
                 break
@@ -738,8 +745,9 @@ def _scale_workloads(spark, cpus, timings, loads, unconverged,
         # Operator-INTERNAL persists are plan-keyed and would serve run
         # 2 from run 1's cache; they are released between runs by
         # dropping the result frame + gc.collect() (release_on_gc ties
-        # their unpersist to the result's lifetime), which leaves the
-        # pinned input untouched.
+        # their unpersist to the result's lifetime) and a JVM GC (Spark
+        # frees localCheckpoint pins once unreachable), which leaves
+        # the pinned input untouched.
         pts = base.persist()
         pts.count()  # materialize generation outside the timed skyline
         ctx = load_ctx_start(calib=True)

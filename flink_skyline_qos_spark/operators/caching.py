@@ -1,19 +1,30 @@
-"""Cache-lifetime plumbing for operators that pin intermediate frames.
+"""Cache-lifetime rule for operators that pin intermediate frames.
 
-Spark's CacheManager keys persisted data by logical plan, not by object
-reference, so an operator-internal ``persist()`` outlives the query: the
-pinned blocks stay resident until an explicit ``unpersist()`` or
-executor memory pressure evicts them (VERDICT r3 "What's wrong" #1 —
-composed pipelines accumulate pinned candidate/signature caches).
+An operator pins a frame in one of two ways, and who releases it
+follows from which:
 
-The consuming action happens OUTSIDE the operator — the operator
-returns a lazy DataFrame whose plan reads the pinned frame — so the
-release can't be eager.  Instead it is tied to the *result frame's
-lifetime*: a driver-side ``weakref.finalize`` unpersists the pins once
-the returned DataFrame is garbage-collected (i.e. after the caller has
-run its action(s) and dropped the frame).  This mirrors what Spark's
-ContextCleaner does for out-of-scope RDDs, which plan-keyed DataFrame
-caches don't get for free.
+* ``localCheckpoint()`` — the default pin, for frames read several
+  times downstream (the MinHash signature table, the connected-
+  components rounds, the corpus capstones' lineage cuts).  Spark owns
+  the release: the checkpoint's RDD is referenced by the logical plan
+  of every frame derived from it, and Spark's ContextCleaner
+  (``spark.cleaner.referenceTracking``, on by default) unpersists it
+  once no live plan on the JVM references it any more.  A frame derived
+  by ``select``/``filter``/``join`` keeps the blocks alive after the
+  operator's own result is dropped, so no Python hook may free them.
+* ``persist()`` — only for pins that must keep their hash partitioning,
+  e.g. the MinHash band frame that the bucket-size aggregate and both
+  sides of the candidate self-join read without an exchange.  With AQE
+  on, ``repartition(k).localCheckpoint()`` followed by ``groupBy(k)``
+  plans a fresh Exchange; ``persist()`` keeps the partitioning.  Spark's
+  CacheManager keys these caches by logical plan, not by object, so it
+  never frees them on its own: :func:`release_on_gc` ties their
+  unpersist to the returned lazy frame's lifetime.  If a derived frame
+  outlives the result, the release costs a recompute, never a wrong
+  answer — a persisted plan keeps its lineage.
+
+Scoped ``persist()``/``unpersist()`` pairs that open and close inside
+one call need neither mechanism.
 """
 
 from __future__ import annotations
@@ -22,16 +33,18 @@ import weakref
 
 from pyspark.sql import DataFrame
 
-__all__ = ["pinned_local_checkpoint", "release_checkpoints_on_gc",
-           "release_on_gc"]
+__all__ = ["release_on_gc"]
 
 
 def release_on_gc(result: DataFrame, *pinned: DataFrame) -> DataFrame:
     """Unpersist every `pinned` frame when `result` is garbage-collected.
 
-    Non-blocking unpersist; errors (e.g. the SparkSession already
-    stopped at interpreter shutdown) are swallowed — the release is
-    best-effort hygiene, never correctness.
+    The finalizer's closure holds `pinned`, so they live at least as
+    long as `result` — wrappers that derive a new frame from an inner
+    operator's result pass that result here to keep its own release
+    from firing early.  Errors (e.g. the SparkSession already stopped
+    at interpreter shutdown) are swallowed — the release is best-effort
+    hygiene, never correctness.
     """
 
     def _cleanup(frames=pinned):
@@ -47,75 +60,3 @@ def release_on_gc(result: DataFrame, *pinned: DataFrame) -> DataFrame:
 
     weakref.finalize(result, _cleanup)
     return result
-
-
-def release_checkpoints_on_gc(result: DataFrame,
-                              *sources: DataFrame) -> DataFrame:
-    """Release localCheckpoint RDD blocks when `result` is collected.
-
-    :func:`~.clustering.connected_components` pins its final round's
-    localCheckpoint at the RDD level (``DataFrame.unpersist`` cannot
-    touch it) and exposes the ids as ``_checkpoint_rdd_ids`` on its
-    output — a pin that must outlive every derived plan.  Composed
-    queries (dedup corpus, capstone) know their OWN result is the last
-    derived plan, so they tie the RDD-id release to its lifetime here,
-    the checkpoint analogue of :func:`release_on_gc`.
-    """
-    # Keep the source frames (and anything THEY pin via _pin_parent —
-    # e.g. dedup_clusters' cc, whose own finalizer unpersists the
-    # canonical edge cache) alive for as long as this result is: the
-    # corpus builders return a frame DERIVED from `sources` and drop
-    # every other reference, so without this pin the next driver GC
-    # fires the upstream release_on_gc finalizers and every later
-    # action silently re-derives the full pair DAG (ADVICE r11
-    # clustering.py:368 — the r11 _pin_parent fix, propagated to
-    # derived results).  Accumulate rather than overwrite: composed
-    # helpers may each pin sources on the same frame (ADVICE r12).
-    # A pre-existing pin may be a bare frame (connected_components
-    # pins its cc slice that way) — normalize to a tuple first.
-    prev = getattr(result, "_pin_parent", ())
-    if isinstance(prev, DataFrame):
-        prev = (prev,)
-    result._pin_parent = tuple(prev) + tuple(sources)
-    ids = tuple(i for s in sources
-                for i in getattr(s, "_checkpoint_rdd_ids", ()))
-    if not ids:
-        return result
-    sc = result.sparkSession.sparkContext
-
-    def _cleanup(jsc=sc._jsc, rdd_ids=ids):
-        for rid in rdd_ids:
-            try:
-                jsc.sc().unpersistRDD(rid, True)  # blocking, as above
-            except Exception:
-                pass
-
-    weakref.finalize(result, _cleanup)
-    return result
-
-
-def pinned_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` that records the RDD blocks it pins.
-
-    Materializes `df` and truncates its lineage — the lever for long
-    composed pipelines whose tail operators scan their input several
-    times (each scan otherwise re-plans/re-derives the whole upstream
-    DAG).  localCheckpoint pins blocks at the RDD level, which
-    ``DataFrame.unpersist`` cannot release; the ids pinned here are
-    snapshot-diffed (assumes no concurrent persist on the same context,
-    as in :mod:`.clustering`) and exposed as ``_checkpoint_rdd_ids`` so
-    callers can tie the release to their result's lifetime via
-    :func:`release_checkpoints_on_gc`.
-    """
-    sc = df.sparkSession.sparkContext
-
-    def _pinned() -> "set[int]":
-        ids, it = set(), sc._jsc.getPersistentRDDs().keySet().iterator()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
-    before = _pinned()
-    out = df.localCheckpoint(eager=True)
-    out._checkpoint_rdd_ids = tuple(_pinned() - before)
-    return out

@@ -95,8 +95,12 @@ def _cc_driver_label(e: DataFrame, *, nodes: DataFrame | None,
     ≤1M distinct nodes peaks at roughly 100-200 MB of Python objects
     for long ids — transient, freed when this function returns.  Both
     are well inside the 56 GB bench driver and documented here rather
-    than hidden behind the raw 8 MB figure."""
+    than hidden behind the raw 8 MB figure.
+
+    `e` is consumed here and never read by the returned label table,
+    so its cache is released right after the collect."""
     pdf = e.toPandas()  # Arrow path — no per-row Row objects
+    e.unpersist(True)
     parent: dict = {}
 
     def find(x):
@@ -141,16 +145,13 @@ def _cc_driver_label(e: DataFrame, *, nodes: DataFrame | None,
     # row for row (optimization r14, guide §2.4: a `distinct` on data
     # that is already unique).  Only extra isolated vertices need any
     # plan at all: the ones not in `lab` label themselves.
-    out = lab
-    if nodes is not None:
-        nc = node_col or nodes.columns[0]
-        extra = (nodes.select(F.col(nc).alias("node")).distinct()
-                 .join(F.broadcast(lab.select("node")), "node", "left_anti")
-                 .select("node", F.col("node").alias("component")))
-        out = lab.unionByName(extra)
-    out = release_on_gc(out, e)
-    out._checkpoint_rdd_ids = ()
-    return out
+    if nodes is None:
+        return lab
+    nc = node_col or nodes.columns[0]
+    extra = (nodes.select(F.col(nc).alias("node")).distinct()
+             .join(F.broadcast(lab.select("node")), "node", "left_anti")
+             .select("node", F.col("node").alias("component")))
+    return lab.unionByName(extra)
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -197,9 +198,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     the new round is materialized so executor storage stays O(|E|)
     rather than O(rounds · |E|).  Only the FINAL round's compact
     checkpoint (the converged star edges) stays pinned — every derived
-    plan reads it and a dropped localCheckpoint cannot recompute; its
-    RDD ids are exposed as ``result._checkpoint_rdd_ids`` for callers
-    that want to release explicitly when done.
+    plan reads it, and Spark's ContextCleaner frees it once no live
+    plan does (see :mod:`.caching`).
 
     By default the checkpoint is ``localCheckpoint`` — fast, but
     non-replicated: after lineage truncation, losing one executor fails
@@ -288,38 +288,12 @@ def connected_components(edges: DataFrame, src: str = "id_a",
             cleanup_dirs.append(subdirs[rnd % 2])
             rnd += 1
     else:
-        # localCheckpoint pins blocks at the RDD level, which
-        # DataFrame.unpersist() does NOT release (it only touches the
-        # CacheManager) — without explicit release every call leaks all
-        # its round checkpoints for the session's lifetime.  Track the
-        # RDD ids each eager checkpoint pins (snapshot diff around the
-        # materializing call; assumes no concurrent persist on the same
-        # context, as everywhere in this module) and drop a round's
-        # blocks by id once the next round is materialized.
-        def _pinned_ids() -> "set[int]":
-            ids, it = set(), sc._jsc.getPersistentRDDs().keySet().iterator()
-            while it.hasNext():
-                ids.add(it.next())
-            return ids
-
-        round_ids: "dict[int, set[int]]" = {}
-        pending: "dict[int, set[int]]" = {}
-
         def ckpt_begin(df: DataFrame) -> DataFrame:
-            # lazy: the ids this checkpoint pins only exist once the
-            # caller's next action materializes it — snapshot now,
-            # diff in ckpt_end
-            before = _pinned_ids()
-            out = df.localCheckpoint(eager=False)
-            pending[id(out)] = before
-            return out
+            # lazy: the caller's next action materializes it
+            return df.localCheckpoint(eager=False)
 
         def ckpt_end(df: DataFrame) -> None:
-            round_ids[id(df)] = _pinned_ids() - pending.pop(id(df))
-
-        def _drop_blocks(df: DataFrame) -> None:
-            for rid in round_ids.pop(id(df), ()):
-                sc._jsc.sc().unpersistRDD(rid, False)
+            pass
 
     _chk_agg = [F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h")]
@@ -343,9 +317,12 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         # returns the convergence checksum
         chk = nxt.agg(*_chk_agg).first()
         ckpt_end(nxt)
-        e.unpersist()
         if checkpoint_dir is None:
-            _drop_blocks(e)
+            # Free the consumed round now: left to the ContextCleaner it
+            # stays pinned until a JVM GC, up to O(rounds·|E|) blocks.
+            # DataFrame.unpersist() only touches the CacheManager, so
+            # unpersist the frame's own checkpointed RDD.
+            e._jdf.queryExecution().analyzed().rdd().unpersist(False)
         e = nxt
         cur = (chk["n"], chk["h"])
         if cur == prev:
@@ -377,18 +354,6 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         weakref.finalize(
             out, lambda dirs=tuple(cleanup_dirs), rm=_rm: [rm(d)
                                                            for d in dirs])
-    else:
-        # The FINAL round's blocks must outlive every plan derived from
-        # `out` — a localCheckpoint cannot recompute once dropped, and
-        # derived frames (dedup_clusters, the corpus queries) may
-        # outlive the `out` object itself, so no GC hook can be safe.
-        # They stay pinned (ONE compact RDD per call, the converged
-        # star edges — the intermediate rounds, the unbounded part, are
-        # dropped eagerly above); callers that are truly done can
-        # release via the ids exposed here:
-        #   for rid in out._checkpoint_rdd_ids:
-        #       sc._jsc.sc().unpersistRDD(rid, False)
-        out._checkpoint_rdd_ids = tuple(round_ids.get(id(e), ()))
     return out
 
 
@@ -404,21 +369,11 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, *,
     """
     cc = connected_components(pairs, src, dst,
                               nodes=df.select(id_col), node_col=id_col)
-    out = cc.select(
+    return cc.select(
         F.col("node").alias(id_col),
         F.col("component").alias("cluster_id"),
         (F.col("node") == F.col("component")).alias("is_canonical"),
     )
-    out._checkpoint_rdd_ids = getattr(cc, "_checkpoint_rdd_ids", ())
-    # Keep the cc frame ALIVE for as long as this derived frame is: the
-    # driver-path cc carries a weakref.finalize that unpersists the
-    # canonicalized edge cache, and select() above creates a NEW Python
-    # object — without this strong ref the next driver GC drops cc,
-    # fires the finalizer, and every later action on the returned frame
-    # silently re-derives the FULL pair DAG (measured ~3 s per action
-    # on the sf0.01 minhash capstones; round 11).
-    out._pin_parent = cc
-    return out
 
 
 def link_rank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
@@ -461,7 +416,6 @@ def link_rank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
              .distinct().persist())
     n = nodes.count()
     if n == 0:
-        from .caching import release_on_gc
         empty = nodes.select(
             F.col("node"), F.lit(0).cast("long").alias("rank_int"),
             F.lit(0.0).alias("rank"))
@@ -502,7 +456,6 @@ def link_rank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
                 last_pinned_ranks.unpersist(False)
             last_pinned_ranks = ranks
             pinned.append(ranks)
-    from .caching import release_on_gc
     out = ranks.select(
         F.col("node"), F.col("__r").alias("rank_int"),
         (F.col("__r").cast("double") / F.lit(float(scale))).alias("rank"))
@@ -573,7 +526,6 @@ def triangle_count(edges: DataFrame, *, src: str = "src",
     each triangle exactly once; degree order is the SCALE choice, not
     a semantic one.
     """
-    from .caching import release_on_gc
 
     e = _canon(edges, src, dst).persist()
     deg = (e.select(F.col("u").alias("node"))

@@ -25,8 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .caching import (pinned_local_checkpoint, release_checkpoints_on_gc,
-                      release_on_gc)
+from .caching import release_on_gc
 
 __all__ = [
     "exact_dedup",
@@ -353,8 +352,9 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     # 3.0 vs 2.4 s.  Row-based blocks skip the columnar encode
     # entirely; eager, like the count() it replaces.  Non-replicated
     # (executor loss recomputes the query) — the documented
-    # localCheckpoint trade the CC operator already makes.
-    sig = pinned_local_checkpoint(sig)
+    # localCheckpoint trade the CC operator already makes.  Spark's
+    # ContextCleaner frees it once no derived plan reads it.
+    sig = sig.localCheckpoint()
     # Band bucket = md5-derived hash of "band:sig[..]:sig[..]" — a pure
     # equi-join key, md5-keyed (like the base hashes) for the SQL twin.
     band_cols = [
@@ -427,7 +427,7 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     if threshold is not None:
         out = out.filter(F.col("est_jaccard") >= threshold)
     out.lsh_dropped = dropped
-    return release_checkpoints_on_gc(release_on_gc(out, banded), sig)
+    return release_on_gc(out, banded)
 
 
 def ngram_jaccard_pairs(df: DataFrame, *, id_col: str = "doc_id",
@@ -834,7 +834,7 @@ def minhash_lsh_pairs_cross(new_df: DataFrame = None,
         # localCheckpoint pin, not persist — the columnar cache
         # builder is pathological for array columns when its codegen
         # is cold (see minhash_lsh_pairs pin A/B: 75 s vs 17 s)
-        sig = pinned_local_checkpoint(sig)
+        sig = sig.localCheckpoint()
         band_cols = [
             _md5_long(F.concat_ws(
                 ":", F.lit(b).cast("string"),
@@ -894,8 +894,7 @@ def minhash_lsh_pairs_cross(new_df: DataFrame = None,
     if threshold is not None:
         out = out.filter(F.col("est_jaccard") >= threshold)
     out.lsh_dropped = dropped
-    return release_checkpoints_on_gc(
-        release_on_gc(out, n_banded, o_banded), n_sig, o_sig)
+    return release_on_gc(out, n_banded, o_banded)
 
 
 def minhash_lsh_pairs_cross_sql(new_sql: str, old_sql: str, *,

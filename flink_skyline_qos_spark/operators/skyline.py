@@ -66,19 +66,6 @@ def _values(pdf: pd.DataFrame, cols: Sequence[str]) -> np.ndarray:
     return pdf[list(cols)].to_numpy(dtype=np.float64, copy=False)
 
 
-def _keep_alive(result: DataFrame, *deps) -> DataFrame:
-    """Pin `deps` (frames carrying release_on_gc finalizers) to
-    `result`'s lifetime, WITHOUT adding any new release action: the
-    narrow-rewrite wrappers derive a new DataFrame from an inner
-    strategy result whose operator-internal caches are tied to the
-    inner OBJECT's lifetime — dropping it early would unpersist blocks
-    the derived plan still reads (correct but a silent recompute)."""
-    import weakref
-
-    weakref.finalize(result, lambda _deps=deps: None)
-    return result
-
-
 def _narrow_rewrite(df: DataFrame, cols: Sequence[str]) -> bool:
     """Default width heuristic: rewrite to dims-only prune + semi-join
     back when the NON-dim payload could dominate the row.
@@ -141,7 +128,9 @@ def _join_back(df: DataFrame, vecs: DataFrame, cols: Sequence[str],
     cond = _red(_and, [
         F.col(c).eqNullSafe(F.col(f"__r_{c}")) for c in by
     ] + [F.col(c) == F.col(f"__r_{c}") for c in cols])
-    out = _keep_alive(
+    # `vecs` is an inner strategy result whose own pins are tied to its
+    # OBJECT's lifetime: keep it alive as long as the derived frame
+    out = release_on_gc(
         df.join(r, cond, "left_semi").select(*df.columns), vecs)
     if hasattr(vecs, "_verify_strategy"):  # propagate the dispatch probe
         out._verify_strategy = vecs._verify_strategy
@@ -1427,7 +1416,6 @@ def skyline_layers(df: DataFrame, cols: Sequence[str], *,
     """
     if max_layers < 1:
         raise ValueError("max_layers must be >= 1")
-    from .caching import release_on_gc
 
     remaining = _complete(df, cols)
     parts: list[DataFrame] = []

@@ -5,8 +5,9 @@ VERDICT r3 #5 / ADVICE r3: operators pin candidate/signature frames
 the operator — but CacheManager keys caches by plan, so without an
 explicit release a composed pipeline accumulates pinned blocks.  The
 release is tied to the result frame's lifetime (weakref finalize —
-`operators/caching.py`); these tests assert the pins actually drain
-once the caller drops the result.
+`operators/caching.py`); localCheckpoint pins are left to Spark's
+ContextCleaner.  These tests assert the pins actually drain once the
+caller drops the result and every frame derived from it.
 """
 
 import gc
@@ -16,7 +17,11 @@ from pyspark.sql import functions as F
 
 
 def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    # Count the context's weak-valued registry in place.
+    # getPersistentRDDs() would copy it into a new map of strong refs,
+    # which py4j keeps alive until its asynchronous finalizer catches
+    # up, so the observer itself would keep checkpoint pins reachable.
+    return spark.sparkContext._jsc.sc().persistentRdds().size()
 
 
 def _settle(spark, expect: "int | None" = None,
@@ -24,16 +29,24 @@ def _settle(spark, expect: "int | None" = None,
     """Pin count after letting async releases drain.  unpersist(False)
     is NON-BLOCKING, so a just-fired release-on-gc finalizer may not be
     reflected immediately; poll until the count reaches `expect` or
-    stops changing."""
+    stops changing.  localCheckpoint pins are released by Spark's
+    ContextCleaner once their RDD is unreachable on the JVM, so each
+    poll runs a Python GC (dropping dead frames' py4j handles) and then
+    a JVM GC."""
     import time as _time
 
+    def _poll() -> int:
+        gc.collect()
+        spark._jvm.System.gc()
+        return _n_persistent(spark)
+
     deadline = _time.time() + timeout
-    prev = _n_persistent(spark)
+    prev = _poll()
     while _time.time() < deadline:
         if expect is not None and prev <= expect:
             return prev
         _time.sleep(0.2)
-        cur = _n_persistent(spark)
+        cur = _poll()
         if expect is None and cur == prev:
             return cur
         prev = cur
@@ -46,7 +59,8 @@ def _baseline(spark) -> int:
     gc.collect() would otherwise push the count below the baseline.
     CHAINED finalizers (a released frame whose own finalizer frees the
     next pin) fire one level per collection pass, so iterate until the
-    settled count stops falling."""
+    settled count stops falling.  Each pass also runs a JVM GC (in
+    _settle) so stale localCheckpoint pins drain too."""
     prev = None
     cur = _n_persistent(spark)
     for _ in range(6):
@@ -135,6 +149,26 @@ def test_minhash_releases_signature_cache(spark, docs):
     assert _settle(spark, base) <= base
 
 
+def test_minhash_derived_frame_outlives_result(spark, docs):
+    """A frame derived from an unbound minhash_lsh_pairs result must
+    still read the signature checkpoint after both GCs run, and the
+    pins must drain once the derived frame is dropped."""
+    from flink_skyline_qos_spark.operators.dedup import minhash_lsh_pairs
+
+    kw = dict(num_hashes=16, bands=4, shingle_k=3, shingle_unit="char")
+    base = _baseline(spark)
+    bound = minhash_lsh_pairs(docs, **kw)
+    n_bound = bound.select("id_a", "id_b").count()
+    del bound
+    derived = minhash_lsh_pairs(docs, **kw).select("id_a", "id_b")
+    gc.collect()
+    spark._jvm.System.gc()
+    assert derived.count() == n_bound > 0
+    del derived
+    gc.collect()
+    assert _settle(spark, base) <= base
+
+
 def test_ngram_releases_index_caches(spark, docs):
     from flink_skyline_qos_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -170,23 +204,3 @@ def test_capstone_composition_releases_all_caches(spark):
     # <=, not ==: a STALE pin from an earlier test draining
     # during this test legitimately lands below the baseline
     assert _settle(spark, base) <= base
-
-
-def test_release_checkpoints_accumulates_pins(spark):
-    """Composed helpers each pin sources on the same frame — earlier
-    pins must survive (ADVICE r12), including the bare-DataFrame form
-    connected_components uses for its cc slice (round 13: the naive
-    tuple-concat fix crashed every dedup_clusters caller)."""
-    from flink_skyline_qos_spark.operators.caching import (
-        release_checkpoints_on_gc,
-    )
-
-    a = spark.range(3)
-    b = spark.range(4)
-    out = spark.range(5)
-    out._pin_parent = a                     # bare frame (clustering.py)
-    out = release_checkpoints_on_gc(out, b)
-    assert out._pin_parent == (a, b)
-    c = spark.range(6)
-    out = release_checkpoints_on_gc(out, c)
-    assert out._pin_parent == (a, b, c)

@@ -8,9 +8,11 @@ judge-checkable without running Spark.  Capture itself is *mostly*
 plan-only, but operators with eager persist pins DO execute real jobs
 at construction time (ADVICE r13): the minhash family runs sig.count()
 and substring_remove/scrub materialize their islands frame
-(iv.persist(); iv.count()) — and those caches stay pinned until the
-captured frame is garbage-collected (release_on_gc).  Frames are
-dropped after each capture so the pins release between queries.
+(iv.persist(); iv.count()) — and those pins stay until the captured
+frame is garbage-collected: persist pins through release_on_gc,
+localCheckpoint pins through Spark's ContextCleaner after a JVM GC.
+Frames are dropped after each capture so the pins release between
+queries.
 Streaming-fixture queries build their replay fixtures lazily inside the
 query callable, which is plan-safe; queries whose callable *executes*
 jobs to build the frame (composite pipelines returning a final frame)
@@ -45,10 +47,12 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
             # drop the frame so release_on_gc unpersists any caches the
-            # operator pinned eagerly during construction (ADVICE r13)
+            # operator pinned eagerly during construction (ADVICE r13),
+            # and the JVM GC lets Spark free its localCheckpoint pins
             del df
             import gc
             gc.collect()
+            spark._jvm.System.gc()
         except Exception as exc:  # noqa: BLE001
             plan = f"PLAN CAPTURE FAILED: {exc!r}\n"
         with open(path, "w") as fh:
