@@ -6,8 +6,8 @@ Usage:
 Writes one <name>.txt per query so before/after plan shapes are
 judge-checkable without running Spark.  Capture itself is *mostly*
 plan-only, but operators with eager persist pins DO execute real jobs
-at construction time (ADVICE r13): the minhash family runs sig.count()
-and substring_remove/scrub materialize their islands frame
+at construction time (ADVICE r13): the minhash family checkpoints its
+signature table eagerly and substring_remove/scrub materialize their islands frame
 (iv.persist(); iv.count()) — and those pins stay until the captured
 frame is garbage-collected: persist pins through release_on_gc,
 localCheckpoint pins through Spark's ContextCleaner after a JVM GC.
