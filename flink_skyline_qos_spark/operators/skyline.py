@@ -1273,9 +1273,9 @@ def grouped_skyline(df: DataFrame, cols: Sequence[str],
     one shuffle on the group key, exact per-group kernel.
 
     NULL group keys form a regular group in every strategy (groupBy
-    semantics; the window plan joins back null-safely).  Dimension
-    columns must be non-null — the parse path guarantees this (P2,
-    `streaming/wire.py`); null/NaN dims have strategy-defined behavior.
+    semantics; the window plan joins back null-safely).  Rows with a
+    NULL or NaN dimension are dropped first (:func:`_complete`), so
+    every strategy answers the same; ±inf compare as ordinary values.
 
     `strategy`:
     * ``"auto"`` — 2-D uses the all-JVM window plan (below); ≥3-D the

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import time
+import traceback
 from typing import Iterator, Sequence, Tuple
 
 import pandas as pd
@@ -395,6 +396,167 @@ def streaming_exact_dedup(stream: DataFrame, keys: Sequence[str], *,
             .dropDuplicatesWithinWatermark(list(keys)))
 
 
+def _committed_batch_loop(stream: DataFrame, work_dir: str, out_name: str,
+                          step, *, store_name: "str | None" = None,
+                          compact_every: int = 8) -> None:
+    """Run `step` over every micro-batch of `stream` with exactly-once
+    outputs: the one commit protocol of the streaming admission loops
+    (``foreachBatch`` plus an idempotent sink, the epoch-commit design
+    of Structured Streaming).
+
+    ``step(batch, store, pin)`` gets the micro-batch, the standing
+    store (None while it is empty) and ``pin``, which persists a frame
+    until the batch ends.  It returns ``(out, delta)``: the batch's
+    output and the rows it adds to the store (None without a store).
+    Batch B writes ``{work_dir}/{out_name}/batch=B`` and, with a store,
+    ``{work_dir}/{store_name}/batch=B``.
+
+    Commit: the store delta is written first, the output second, and a
+    ``_COMMITTED`` marker in the output dir last.  The marker is ours,
+    not the directory (Spark creates an output dir when its write job
+    STARTS, so a crash mid-write leaves a truncated dir) and not
+    Hadoop's ``_SUCCESS`` (written only when
+    ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` is on).  Spark
+    replays an uncommitted micro-batch after a restart, and a run on a
+    fresh checkpoint replays them all: a batch whose marker exists is
+    skipped, one without it rewrites both dirs in ``overwrite`` mode.
+    A crash anywhere before the marker therefore replays into an
+    overwrite, never into a lost or doubled batch.
+
+    Store view: the newest committed ``compact=B`` snapshot plus the
+    batch stores after it whose output dir is committed.  A store
+    without a committed output is the orphan of a crash between the two
+    writes; reading it would match the replay against its own rows, so
+    it is left out (the replay overwrites it).
+
+    An empty batch commits like any other: the step runs on it, so its
+    empty frames carry the schemas of a non-empty batch, the next batch
+    reads the store with one schema, and the compaction cadence counts
+    committed batches.
+
+    Pins are unpersisted in a ``finally``, so a failed write releases
+    them too.  :func:`_compact_store` runs after every batch, a skipped
+    replay included, so the replay finishes a compaction or GC that a
+    crash cut short.
+    """
+    out_dir = os.path.join(work_dir, out_name)
+    store_dir = store_name and os.path.join(work_dir, store_name)
+
+    def commit(batch_df: DataFrame, batch_id: int, pin) -> None:
+        store = None
+        if store_dir:
+            snap, _, newer = _store_dirs(store_dir, out_dir)
+            src = ([snap] if snap else []) + newer
+            store = (batch_df.sparkSession.read.parquet(*src)
+                     if src else None)
+        out, delta = step(batch_df, store, pin)
+        if store_dir:
+            delta.write.mode("overwrite").parquet(
+                os.path.join(store_dir, f"batch={batch_id}"))
+        bdir = os.path.join(out_dir, f"batch={batch_id}")
+        out.write.mode("overwrite").parquet(bdir)
+        with open(os.path.join(bdir, "_COMMITTED"), "w"):
+            pass
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if not os.path.isfile(os.path.join(out_dir, f"batch={batch_id}",
+                                           "_COMMITTED")):
+            pins = []
+
+            def pin(df: DataFrame) -> DataFrame:
+                pins.append(df.persist())
+                return pins[-1]
+
+            try:
+                commit(batch_df, batch_id, pin)
+            except Exception as e:
+                # pyspark keeps a failed batch's exception while the
+                # query object lives; its frames' DataFrames would keep
+                # the operators' own pins reachable, so drop them
+                traceback.clear_frames(e.__traceback__)
+                raise
+            finally:
+                for df in pins:
+                    df.unpersist()
+                pins.clear()
+        if store_dir:
+            _compact_store(batch_df.sparkSession, store_dir, out_dir,
+                           compact_every)
+
+    (stream.writeStream.foreachBatch(process)
+     .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
+     .trigger(availableNow=True).start().awaitTermination())
+
+
+def _dir_id(path: str) -> int:
+    """Numeric suffix of a ``name=<id>`` store directory."""
+    return int(os.path.basename(path).split("=", 1)[1])
+
+
+def _store_dirs(store_dir: str,
+                out_dir: str) -> "tuple[str | None, int, list[str]]":
+    """``(snap, snap_b, newer)``: the newest committed ``compact=B``
+    snapshot and its B ((None, -1) when there is none), and the batch
+    stores after it whose output dir is committed, oldest first."""
+    import glob
+
+    snaps = [d for d in glob.glob(os.path.join(store_dir, "compact=*"))
+             if os.path.isfile(os.path.join(d, "_COMMITTED"))]
+    snap = max(snaps, key=_dir_id, default=None)
+    snap_b = _dir_id(snap) if snap else -1
+    newer = sorted(
+        (d for d in glob.glob(os.path.join(store_dir, "batch=*"))
+         if _dir_id(d) > snap_b and os.path.isfile(os.path.join(
+             out_dir, os.path.basename(d), "_COMMITTED"))),
+        key=_dir_id)
+    return snap, snap_b, newer
+
+
+def _compact_store(spark, store_dir: str, out_dir: str,
+                   compact_every: int) -> None:
+    """Once `compact_every` committed batch stores follow the newest
+    snapshot, fold them and that snapshot into ``compact=B`` (B = the
+    newest store folded), then delete what it covers.  Without the
+    fold every batch reads every store ever written, O(B²) cumulative
+    I/O (ADVICE r7); without the GC disk and write volume grow
+    O(B²/compact_every) (ADVICE r8).
+
+    The fold is a plain union: batch deltas are disjoint (admitted ids
+    differ across batches, and a span hash enters the store only when
+    no committed store holds it).  The snapshot's ``_COMMITTED`` marker
+    is written strictly after its parquet write, every reader ignores
+    an uncommitted snapshot, and nothing is deleted before a committed
+    snapshot covers it.  Each call first sweeps what the newest
+    committed snapshot already covers, which finishes a GC that a crash
+    cut short.  Orphan stores newer than the snapshot are not covered
+    and stay (their replay overwrites them).
+    """
+    import glob
+    import shutil
+
+    snap, snap_b, newer = _store_dirs(store_dir, out_dir)
+    if snap is not None:
+        for d in glob.glob(os.path.join(store_dir, "compact=*")):
+            if _dir_id(d) < snap_b:
+                shutil.rmtree(d, ignore_errors=True)
+        for d in glob.glob(os.path.join(store_dir, "batch=*")):
+            if _dir_id(d) <= snap_b:
+                shutil.rmtree(d, ignore_errors=True)
+    if len(newer) < compact_every:
+        return
+    new_b = _dir_id(newer[-1])
+    cdir = os.path.join(store_dir, f"compact={new_b}")
+    spark.read.parquet(*([snap] if snap else []), *newer) \
+        .write.mode("overwrite").parquet(cdir)
+    with open(os.path.join(cdir, "_COMMITTED"), "w"):
+        pass
+    for d in glob.glob(os.path.join(store_dir, "compact=*")):
+        if _dir_id(d) < new_b:
+            shutil.rmtree(d, ignore_errors=True)
+    for d in newer:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def run_streaming_minhash_admission(stream_docs: DataFrame,
                                     work_dir: str, *,
                                     id_col: str = "doc_id",
@@ -409,27 +571,20 @@ def run_streaming_minhash_admission(stream_docs: DataFrame,
     self-check → cross-check vs the standing signature store → admit →
     append the admitted docs' signatures to the store).
 
-    Composition of the registered batch operators inside
-    ``foreachBatch`` (the LSH pipeline needs actions — persist/count —
-    a pure streaming plan cannot express): per micro-batch,
-    `minhash_lsh_pairs` rejects within-batch near-dups (keep-first:
-    the smaller id of each candidate pair survives, transitively via
-    its rejection set), then `minhash_lsh_pairs_cross` against the
-    PRECOMPUTED signature parquet (`minhash_signatures` of everything
-    admitted so far — the standing corpus text is never re-shingled),
-    and the survivors' docs + signatures land in per-batch directories
-    sealed by a framework-owned ``_COMMITTED`` marker that makes
-    retries idempotent (Spark may re-run a batch after recovery; a
-    batch whose marker exists is skipped, matching the engine's epoch
-    convention).
+    Composition of the registered batch operators in the
+    committed-batch loop (:func:`_committed_batch_loop`; the LSH
+    pipeline needs actions — persist/count — a pure streaming plan
+    cannot express): per micro-batch, `minhash_lsh_pairs` rejects
+    within-batch near-dups (keep-first: the smaller id of each
+    candidate pair survives, transitively via its rejection set), then
+    `minhash_lsh_pairs_cross` checks the survivors against the
+    PRECOMPUTED signature store (`minhash_signatures` of everything
+    admitted so far — the standing corpus text is never re-shingled).
 
     State is the signature store: O(admitted · num_hashes) longs on
     disk, read per batch — at scale a bucketed table partitioned by
-    band keys.  Like the span store (ADVICE r7), the per-batch dirs
-    fold into a ``{sig_dir}/compact=B`` snapshot every `compact_every`
-    committed batches, so the per-batch read is snapshot + newer
-    stores, not every store ever written (admitted ids are disjoint
-    across batches, so the fold is a plain union rewrite).  Results:
+    band keys — folded into a ``sigs/compact=B`` snapshot every
+    `compact_every` committed batches.  Results:
     ``{work_dir}/admitted`` (the admitted docs, ``batch=N``
     partitions) and ``{work_dir}/sigs``.
     """
@@ -439,91 +594,29 @@ def run_streaming_minhash_admission(stream_docs: DataFrame,
         minhash_signatures,
     )
 
-    adm_dir = os.path.join(work_dir, "admitted")
-    sig_dir = os.path.join(work_dir, "sigs")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bdir = os.path.join(adm_dir, f"batch={batch_id}")
-        # Commit marker is a framework-OWNED _COMMITTED file, NOT
-        # directory existence (Spark creates the output dir when the
-        # write job *starts*, so a crash mid-write leaves a partial
-        # batch=N dir that a bare isdir check would skip as committed,
-        # silently admitting a truncated batch — VERDICT r5 #2) and NOT
-        # Hadoop's _SUCCESS (only written when
-        # mapreduce.fileoutputcommitter.marksuccessfuljobs=true; with
-        # markers disabled no batch would ever look committed, every
-        # restart would reprocess everything and the committed-sigs
-        # filter would silently disable cross-batch dedup — ADVICE r6).
-        # We touch _COMMITTED ourselves strictly after the docs write
-        # returns; its absence means re-process (mode=overwrite below
-        # replaces any partial output).
-        if os.path.isfile(os.path.join(bdir, "_COMMITTED")):
-            return  # replayed batch: already committed
-        snap, snap_b = _latest_committed(sig_dir, "compact=*")
-        batch = batch_df.select(id_col, text_col).persist()
-        if batch.count() == 0:
-            # commit the empty batch (review r9; see the embedding loop)
-            # store schema must match the non-empty batches': the sig
-            # store carries id_col (minhash_signatures renames id →
-            # id_col before the write) — a literal "id" here broke the
-            # next batch's cross-check read (review r9, pass 2)
-            _commit_empty(spark, sig_dir, bdir, batch_id,
-                          f"{id_col} long, sig array<long>", batch.schema)
-            batch.unpersist()
-            _compact_store(spark, sig_dir, adm_dir, snap, snap_b,
-                           batch_id, compact_every)
-            return
+    def step(batch_df: DataFrame, store, pin):
+        batch = pin(batch_df.select(id_col, text_col))
         self_pairs = minhash_lsh_pairs(
             batch, id_col=id_col, text_col=text_col,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
             threshold=threshold)
         rejected = self_pairs.select(F.col("id_b").alias(id_col))
-        survivors = batch.join(rejected.distinct(), on=id_col,
-                               how="left_anti").persist()
-        # Only signatures of COMMITTED batches (those whose admitted-docs
-        # _COMMITTED marker exists) join the cross-check.  A sig dir without
-        # a fully-committed docs dir is an orphan from a crash between
-        # (or during) the two writes; reading it here would match this
-        # replay's survivors against themselves (est_jaccard=1.0) and
-        # silently drop the batch.  The replay overwrites the orphan
-        # below, so skipping it is safe.
-        committed = [d for d in _committed_batch_stores(sig_dir, adm_dir)
-                     if _dir_id(d) > snap_b]
-        if snap is not None:
-            committed = [snap] + committed
-        if committed:
-            old_sigs = spark.read.parquet(*committed)
+        admitted = pin(batch.join(rejected.distinct(), on=id_col,
+                                  how="left_anti"))
+        if store is not None:
             cross = minhash_lsh_pairs_cross(
-                survivors, old_signatures=old_sigs, id_col=id_col,
+                admitted, old_signatures=store, id_col=id_col,
                 text_col=text_col, num_hashes=num_hashes, bands=bands,
                 shingle_k=shingle_k, threshold=threshold)
             dupes = cross.select(F.col("new_id").alias(id_col)).distinct()
-            admitted = survivors.join(dupes, on=id_col, how="left_anti")
-        else:
-            admitted = survivors
-        admitted = admitted.persist()
-        sigs = minhash_signatures(
+            admitted = pin(admitted.join(dupes, on=id_col,
+                                         how="left_anti"))
+        return admitted, minhash_signatures(
             admitted, id_col=id_col, text_col=text_col,
             num_hashes=num_hashes, shingle_k=shingle_k)
-        # signatures first, docs last, marker after both: _COMMITTED is
-        # touched only once BOTH writes returned, so a crash anywhere
-        # before it replays into an overwrite, never a lost batch
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(sig_dir, f"batch={batch_id}"))
-        admitted.write.mode("overwrite").parquet(bdir)
-        with open(os.path.join(bdir, "_COMMITTED"), "w"):
-            pass  # the framework-owned commit marker (ADVICE r6)
-        admitted.unpersist()
-        survivors.unpersist()
-        batch.unpersist()
-        _compact_store(spark, sig_dir, adm_dir, snap, snap_b, batch_id,
-                       compact_every)
 
-    q = (stream_docs.writeStream.foreachBatch(process)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _committed_batch_loop(stream_docs, work_dir, "admitted", step,
+                          store_name="sigs", compact_every=compact_every)
 
 
 def run_streaming_substring_admission(stream_docs: DataFrame,
@@ -542,20 +635,18 @@ def run_streaming_substring_admission(stream_docs: DataFrame,
     (keep-first: the smaller id of each within-batch pair survives,
     transitively via the rejection set) nor the standing corpus.
 
-    Per micro-batch: :func:`~..operators.dedup.substring_dedup_pairs`
-    rejects within-batch pairs, then
+    Per micro-batch of the committed-batch loop
+    (:func:`_committed_batch_loop`):
+    :func:`~..operators.dedup.substring_dedup_pairs` rejects
+    within-batch pairs, then
     :func:`~..operators.dedup.substring_dedup_pairs_cross` checks the
     survivors against the standing POSITIONED-SHINGLE store
     (``_positioned_shingles`` of everything admitted so far — the
     standing corpus text is never re-tokenized; the cross operator's
     combined df cap spans batch + store exactly as in the batch
-    twin, so the composed SQL oracle is exact).  Same durability
-    discipline as the sibling loops: per-batch dirs sealed by a
-    framework-owned ``_COMMITTED`` marker written strictly after both
-    writes return (idempotent replay, orphan stores excluded), store
-    folded into ``{store_dir}/compact=B`` snapshots every
-    `compact_every` committed batches (admitted ids are disjoint
-    across batches, so the fold is a plain union rewrite).
+    twin, so the composed SQL oracle is exact).  The store folds into
+    a ``shingles/compact=B`` snapshot every `compact_every` committed
+    batches.
 
     State is O(admitted tokens) (id, pos, h) rows on disk — at scale a
     bucketed table hashed on `h`, the same layout the fingerprint join
@@ -573,68 +664,30 @@ def run_streaming_substring_admission(stream_docs: DataFrame,
         substring_dedup_pairs_cross,
     )
 
-    adm_dir = os.path.join(work_dir, "admitted")
-    store_dir = os.path.join(work_dir, "shingles")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bdir = os.path.join(adm_dir, f"batch={batch_id}")
-        if os.path.isfile(os.path.join(bdir, "_COMMITTED")):
-            return  # replayed batch: already committed
-        snap, snap_b = _latest_committed(store_dir, "compact=*")
-        batch = batch_df.select(id_col, text_col).persist()
-        if batch.count() == 0:
-            _commit_empty(spark, store_dir, bdir, batch_id,
-                          "id long, pos int, h long", batch.schema)
-            batch.unpersist()
-            _compact_store(spark, store_dir, adm_dir, snap, snap_b,
-                           batch_id, compact_every)
-            return
+    def step(batch_df: DataFrame, store, pin):
+        batch = pin(batch_df.select(id_col, text_col))
         self_pairs = substring_dedup_pairs(
             batch, id_col=id_col, text_col=text_col, k=k,
             min_span=min_span, max_df=max_df, unit=unit)
         rejected = self_pairs.select(F.col("id_b").alias(id_col))
-        survivors = batch.join(rejected.distinct(), on=id_col,
-                               how="left_anti").persist()
-        committed = [d for d in _committed_batch_stores(store_dir,
-                                                        adm_dir)
-                     if _dir_id(d) > snap_b]
-        if snap is not None:
-            committed = [snap] + committed
-        if committed:
-            old_sh = spark.read.parquet(*committed)
+        admitted = pin(batch.join(rejected.distinct(), on=id_col,
+                                  how="left_anti"))
+        if store is not None:
             cross = substring_dedup_pairs_cross(
-                survivors, old_shingles=old_sh, id_col=id_col,
+                admitted, old_shingles=store, id_col=id_col,
                 text_col=text_col, k=k, min_span=min_span,
                 max_df=max_df, unit=unit)
-            dupes = cross.select(
-                F.col("new_id").alias(id_col)).distinct()
-            admitted = survivors.join(dupes, on=id_col,
-                                      how="left_anti")
-        else:
-            admitted = survivors
-        # persist WITHOUT an eager count (the r12 embedding-loop trim):
-        # the shingle-store write is the first evaluator
-        admitted = admitted.persist()
-        sh = _positioned_shingles(admitted, id_col, text_col, int(k),
-                                  unit=unit)
-        # store first, docs last, marker after both (see the minhash
-        # loop: a crash before the marker replays into an overwrite)
-        sh.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch={batch_id}"))
-        admitted.write.mode("overwrite").parquet(bdir)
-        with open(os.path.join(bdir, "_COMMITTED"), "w"):
-            pass  # the framework-owned commit marker
-        admitted.unpersist()
-        survivors.unpersist()
-        batch.unpersist()
-        _compact_store(spark, store_dir, adm_dir, snap, snap_b,
-                       batch_id, compact_every)
+            dupes = cross.select(F.col("new_id").alias(id_col)).distinct()
+            # persist WITHOUT an eager count (the r12 embedding-loop
+            # trim): the shingle-store write is the first evaluator
+            admitted = pin(admitted.join(dupes, on=id_col,
+                                         how="left_anti"))
+        return admitted, _positioned_shingles(admitted, id_col, text_col,
+                                              int(k), unit=unit)
 
-    q = (stream_docs.writeStream.foreachBatch(process)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _committed_batch_loop(stream_docs, work_dir, "admitted", step,
+                          store_name="shingles",
+                          compact_every=compact_every)
 
 
 def run_streaming_embedding_admission(stream_vecs: DataFrame,
@@ -660,12 +713,9 @@ def run_streaming_embedding_admission(stream_vecs: DataFrame,
     via :func:`~..operators.similarity.embedding_near_dup_lsh_cross`
     against the standing hyperplane-LSH signature store
     (:func:`~..operators.similarity.embedding_signatures` of everything
-    admitted so far — admitted vectors are never re-projected), and
-    the same durability discipline: per-batch dirs sealed by a
-    framework-owned ``_COMMITTED`` marker (idempotent replay), orphan
-    stores excluded from the cross-check, store folded into a
-    ``{sig_dir}/compact=B`` snapshot every `compact_every` committed
-    batches with superseded state GC'd (`_compact_store`).
+    admitted so far — admitted vectors are never re-projected), folded
+    into a ``sigs/compact=B`` snapshot every `compact_every` committed
+    batches.
 
     Results: ``{work_dir}/admitted`` (admitted vectors, ``batch=N``)
     and ``{work_dir}/sigs`` (their band signatures + vectors).
@@ -676,98 +726,49 @@ def run_streaming_embedding_admission(stream_vecs: DataFrame,
         embedding_signatures,
     )
 
-    adm_dir = os.path.join(work_dir, "admitted")
-    sig_dir = os.path.join(work_dir, "sigs")
     # `dim` memo: without it embedding_signatures runs an eager
     # first() job PER BATCH just to measure the vector length (r10
     # trim — each saved job is ~0.3 s of scheduling at gate scale)
     dims = {"d": dim}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bdir = os.path.join(adm_dir, f"batch={batch_id}")
-        if os.path.isfile(os.path.join(bdir, "_COMMITTED")):
-            return  # replayed batch: already committed
-        snap, snap_b = _latest_committed(sig_dir, "compact=*")
-        batch = batch_df.select(id_col, vec_col).persist()
-        if batch.count() == 0:
-            # commit the empty batch like any other (review r9): the
-            # final reader expects {adm_dir} to exist even when every
-            # batch was empty, and an empty sig store keeps the
-            # compaction cadence counting COMMITTED BATCHES, not
-            # batches-that-admitted-something
-            _commit_empty(spark, sig_dir, bdir, batch_id,
-                          f"id long, {vec_col} array<float>, "
-                          + ", ".join(f"b{i} long" for i in range(bands)),
-                          batch.schema)
-            batch.unpersist()
-            _compact_store(spark, sig_dir, adm_dir, snap, snap_b,
-                           batch_id, compact_every)
-            return
+    def step(batch_df: DataFrame, store, pin):
+        batch = pin(batch_df.select(id_col, vec_col))
+        if dims["d"] is None and (row := batch.select(vec_col).first()):
+            dims["d"] = len(row[0])
         # ONE signature pass per batch: the SAME frame feeds the
         # self-check, the cross-check (new_signatures), and — filtered
-        # to the admitted ids — the store write; batch vectors are
-        # never re-projected
-        if dims["d"] is None:
-            dims["d"] = len(batch.select(vec_col).first()[0])
-        batch_sigs = embedding_signatures(
-            batch, dim=dims["d"], id_col=id_col, vec_col=vec_col,
-            n_planes=n_planes, bands=bands, seed=seed).persist()
+        # to the admitted ids — the store delta; batch vectors are
+        # never re-projected.  An empty batch projects nothing, so any
+        # dim gives it the store's schema.
+        batch_sigs = pin(embedding_signatures(
+            batch, dim=dims["d"] or 1, id_col=id_col, vec_col=vec_col,
+            n_planes=n_planes, bands=bands, seed=seed))
         self_pairs = embedding_near_dup_lsh(
             batch, threshold, id_col=id_col, vec_col=vec_col,
             n_planes=n_planes, bands=bands, seed=seed,
             max_bucket=max_bucket, signatures=batch_sigs)
         rejected = self_pairs.select(F.col("id_b").alias(id_col))
-        survivors = batch.join(rejected.distinct(), on=id_col,
-                               how="left_anti").persist()
-        new_sigs = batch_sigs.join(
-            survivors.select(F.col(id_col).alias("id")), "id",
-            "left_semi")
-        committed = [d for d in _committed_batch_stores(sig_dir, adm_dir)
-                     if _dir_id(d) > snap_b]
-        if snap is not None:
-            committed = [snap] + committed
-        if committed:
-            old_sigs = spark.read.parquet(*committed)
+        admitted = pin(batch.join(rejected.distinct(), on=id_col,
+                                  how="left_anti"))
+        if store is not None:
+            new_sigs = batch_sigs.join(
+                admitted.select(F.col(id_col).alias("id")), "id",
+                "left_semi")
             cross = embedding_near_dup_lsh_cross(
-                new_signatures=new_sigs, old_signatures=old_sigs,
+                new_signatures=new_sigs, old_signatures=store,
                 threshold=threshold, id_col=id_col, vec_col=vec_col,
                 n_planes=n_planes, bands=bands, seed=seed,
                 max_bucket=max_bucket)
             dupes = cross.select(F.col("new_id").alias(id_col)).distinct()
-            admitted = survivors.join(dupes, on=id_col, how="left_anti")
-        else:
-            admitted = survivors
-        # persist WITHOUT an eager count (r12 gate trim): the sig
-        # write below is the first evaluator and populates this cache;
-        # the admitted write then reuses it — a separate count() job
-        # bought nothing but ~0.5 s of scheduling per batch
-        admitted = admitted.persist()
-        # the sig store is written for EVERY committed batch — possibly
-        # empty (review r9: skipping zero-admit batches made the
-        # compaction cadence count admitting batches only, deferring
-        # compaction + GC indefinitely under alternating empty admits)
-        sigs = batch_sigs.join(
+            # persist WITHOUT an eager count (r12 gate trim): the store
+            # write is the first evaluator and populates this cache
+            admitted = pin(admitted.join(dupes, on=id_col,
+                                         how="left_anti"))
+        return admitted, batch_sigs.join(
             admitted.select(F.col(id_col).alias("id")), "id", "left_semi")
-        # signatures first, vectors last, marker after both (see the
-        # minhash loop: a crash before the marker replays into an
-        # overwrite, never a lost or half-admitted batch)
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(sig_dir, f"batch={batch_id}"))
-        admitted.write.mode("overwrite").parquet(bdir)
-        with open(os.path.join(bdir, "_COMMITTED"), "w"):
-            pass
-        admitted.unpersist()
-        batch_sigs.unpersist()
-        survivors.unpersist()
-        batch.unpersist()
-        _compact_store(spark, sig_dir, adm_dir, snap, snap_b, batch_id,
-                       compact_every)
 
-    q = (stream_vecs.writeStream.foreachBatch(process)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _committed_batch_loop(stream_vecs, work_dir, "admitted", step,
+                          store_name="sigs", compact_every=compact_every)
 
 
 def _schemas(dims: int) -> tuple[StructType, StructType]:
@@ -1330,55 +1331,39 @@ SELECT win_start, win_end, __{names[0]}.n, {", ".join(q_sel)}
 FROM {joins}
 """.strip()
 
-def _mark_spans(docs, span_dir: str, out_dir: str, unit_tokens: int):
-    """Shared span-admission core of the paragraph-admission and
+
+def _mark_spans(docs: DataFrame, store, unit_tokens: int, pin) -> DataFrame:
+    """Shared span-admission step of the paragraph-admission and
     composed-ingest loops (review r8: the winner rule, seen-store read
     and __keep predicate must be ONE implementation or the two loops'
-    oracle parity can silently diverge).  `docs` carries (id, __text);
-    returns ``(units, marked, snap, snap_b)`` where `marked` has one
-    row per span with the admission verdict:
+    oracle parity can silently diverge).  `docs` carries (id, __text)
+    and `store` is the loop's span-store view (None while empty).
+    Returns a pinned frame with one row per span and the admission
+    verdict ``__keep``:
 
     * in-batch winner: min (id, pos) per span hash, AND
-    * never seen in the standing store (newest committed snapshot +
-      committed batch stores after it; orphan stores excluded via the
-      owning docs dir's marker).
-
-    Both returned frames are persisted; the caller unpersists them
-    after its writes and runs :func:`_compact_store` with the returned
-    snapshot coordinates.
+    * never seen in the store.
     """
     from ..functions.corpus import unit_spans
     from ..operators.dedup import _md5_long
 
-    spark = docs.sparkSession
-    units = (docs.select(
+    units = pin(docs.select(
         "id",
         F.posexplode(unit_spans(F.col("__text"), unit_tokens))
         .alias("pos", "unit"))
-        .withColumn("h", _md5_long(F.col("unit")))
-        .persist())
+        .withColumn("h", _md5_long(F.col("unit"))))
     units.count()
     first = units.groupBy("h").agg(
         F.min(F.struct("id", "pos")).alias("__first"))
-    snap, snap_b = _latest_committed(span_dir, "compact=*")
-    committed = [d for d in _committed_batch_stores(span_dir, out_dir)
-                 if _dir_id(d) > snap_b]
-    if snap is not None:
-        committed = [snap] + committed
-    if committed:
-        seen = spark.read.parquet(*committed).select("h").distinct() \
-            .withColumn("__seen", F.lit(True))
-    else:
-        seen = spark.createDataFrame([], "h long") \
-            .withColumn("__seen", F.lit(True))
-    marked = (units.join(first, "h").join(seen, "h", "left")
-              .select(
-                  "id", "pos", "unit", "h",
-                  ((F.col("__first.id") == F.col("id"))
-                   & (F.col("__first.pos") == F.col("pos"))
-                   & F.col("__seen").isNull()).alias("__keep"))
-              .persist())
-    return units, marked, snap, snap_b
+    if store is None:
+        store = docs.sparkSession.createDataFrame([], "h long")
+    seen = store.select("h").distinct().withColumn("__seen", F.lit(True))
+    return pin(units.join(first, "h").join(seen, "h", "left")
+               .select(
+                   "id", "pos", "unit", "h",
+                   ((F.col("__first.id") == F.col("id"))
+                    & (F.col("__first.pos") == F.col("pos"))
+                    & F.col("__seen").isNull()).alias("__keep")))
 
 
 def run_streaming_ingest_pipeline(stream_docs: DataFrame, work_dir: str, *,
@@ -1411,31 +1396,20 @@ def run_streaming_ingest_pipeline(stream_docs: DataFrame, work_dir: str, *,
     composed DuckDB twin (c4_rules_sql ∘ dedup_paragraphs_sql over the
     kept set) is an EXACT oracle for the streamed union, up to the
     span store's 60-bit hash keying (collision bound in the span-
-    admission docstring).  Durability: per-batch output dirs under
-    ``{work_dir}/cleaned`` sealed by framework-owned ``_COMMITTED``
-    markers, span stores under ``{work_dir}/spans``, replays
-    idempotent, orphan stores excluded — the shared admission-loop
-    protocol.
+    admission docstring).  Results: ``{work_dir}/cleaned`` and
+    ``{work_dir}/spans``, written by :func:`_committed_batch_loop`.
     """
     from ..functions.corpus import c4_rules, reassemble_spans
 
-    out_dir = os.path.join(work_dir, "cleaned")
-    span_dir = os.path.join(work_dir, "spans")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bdir = os.path.join(out_dir, f"batch={batch_id}")
-        if os.path.isfile(os.path.join(bdir, "_COMMITTED")):
-            return  # replayed batch: already committed
-        score = c4_rules(batch_df, id_col=id_col, text_col=text_col,
-                         **c4_kwargs) \
-            .select(F.col(id_col).alias("id"), "failed", "kept").persist()
+    def step(batch_df: DataFrame, store, pin):
+        score = pin(c4_rules(batch_df, id_col=id_col, text_col=text_col,
+                             **c4_kwargs)
+                    .select(F.col(id_col).alias("id"), "failed", "kept"))
         kept_docs = (batch_df
                      .select(F.col(id_col).alias("id"),
                              F.col(text_col).alias("__text"))
                      .join(score.filter("kept").select("id"), "id"))
-        units, marked, snap, snap_b = _mark_spans(
-            kept_docs, span_dir, out_dir, unit_tokens)
+        marked = _mark_spans(kept_docs, store, unit_tokens, pin)
         cleaned = reassemble_spans(marked, kept_docs.select("id"),
                                    id_col="id")
         # one row per INPUT document: gate verdict + reassembly
@@ -1447,23 +1421,10 @@ def run_streaming_ingest_pipeline(stream_docs: DataFrame, work_dir: str, *,
             .alias("n_units"),
             F.coalesce("n_dupes", F.lit(0)).cast("long")
             .alias("n_dupes")))
-        novel = marked.filter("__keep").select("h").distinct()
-        novel.write.mode("overwrite").parquet(
-            os.path.join(span_dir, f"batch={batch_id}"))
-        out.write.mode("overwrite").parquet(bdir)
-        with open(os.path.join(bdir, "_COMMITTED"), "w"):
-            pass
-        marked.unpersist()
-        units.unpersist()
-        score.unpersist()
-        _compact_store(spark, span_dir, out_dir, snap, snap_b, batch_id,
-                       compact_every,
-                       fold=lambda df: df.select("h").distinct())
+        return out, marked.filter("__keep").select("h").distinct()
 
-    q = (stream_docs.writeStream.foreachBatch(process)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _committed_batch_loop(stream_docs, work_dir, "cleaned", step,
+                          store_name="spans", compact_every=compact_every)
 
 
 def run_streaming_c4_admission(stream_docs: DataFrame, work_dir: str, *,
@@ -1474,17 +1435,14 @@ def run_streaming_c4_admission(stream_docs: DataFrame, work_dir: str, *,
     :func:`~..functions.corpus.c4_rules`.  A crawl pipeline filters on
     the cheap lexical quality rules FIRST (before any dedup state is
     touched) — and the rules are stateless per document, so the
-    streaming form is exactly the batch operator applied inside
-    ``foreachBatch``, which makes the batch operator's SQL twin an
-    EXACT oracle for the union of all batch outputs.
+    streaming form is exactly the batch operator applied per
+    micro-batch of :func:`_committed_batch_loop`, which makes the batch
+    operator's SQL twin an EXACT oracle for the union of all batch
+    outputs.
 
-    Same durability discipline as the other admission loops: per-batch
-    output dirs under ``{work_dir}/scored`` sealed by a framework-owned
-    ``_COMMITTED`` marker written strictly after the write returns;
-    replayed batches whose marker exists are skipped, so retries are
-    idempotent.  Every document is emitted with its rule scores,
-    failure reasons and the ``kept`` verdict (rejected rows kept for
-    the threshold-tuning histogram, like the batch operator).
+    Every document is emitted to ``{work_dir}/scored`` with its rule
+    scores, failure reasons and the ``kept`` verdict (rejected rows
+    kept for the threshold-tuning histogram, like the batch operator).
 
     No cross-batch state at all — at 100 TB this is an embarrassingly
     parallel map over the stream, and the per-batch cost is the batch
@@ -1492,130 +1450,11 @@ def run_streaming_c4_admission(stream_docs: DataFrame, work_dir: str, *,
     """
     from ..functions.corpus import c4_rules
 
-    out_dir = os.path.join(work_dir, "scored")
+    def step(batch_df: DataFrame, store, pin):
+        return c4_rules(batch_df, id_col=id_col, text_col=text_col,
+                        **rule_kwargs), None
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bdir = os.path.join(out_dir, f"batch={batch_id}")
-        if os.path.isfile(os.path.join(bdir, "_COMMITTED")):
-            return  # replayed batch: already committed
-        scored = c4_rules(batch_df, id_col=id_col, text_col=text_col,
-                          **rule_kwargs)
-        scored.write.mode("overwrite").parquet(bdir)
-        with open(os.path.join(bdir, "_COMMITTED"), "w"):
-            pass  # framework-owned commit marker
-    q = (stream_docs.writeStream.foreachBatch(process)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-
-def _commit_empty(spark, store_dir: str, bdir: str, batch_id: int,
-                  store_schema, out_schema) -> None:
-    """Commit an EMPTY micro-batch exactly like a non-empty one: empty
-    batch store, empty output dir, marker after both — so the final
-    output reader never hits a missing path and the compaction cadence
-    counts committed BATCHES, not batches-that-admitted-something
-    (review r9)."""
-    spark.createDataFrame([], store_schema).write.mode(
-        "overwrite").parquet(os.path.join(store_dir, f"batch={batch_id}"))
-    spark.createDataFrame([], out_schema).write.mode(
-        "overwrite").parquet(bdir)
-    with open(os.path.join(bdir, "_COMMITTED"), "w"):
-        pass
-
-
-def _dir_id(path: str) -> int:
-    """Numeric suffix of a ``name=<id>`` store directory."""
-    return int(os.path.basename(path).split("=", 1)[1])
-
-
-def _latest_committed(root: str, pattern: str) -> "tuple[str | None, int]":
-    """Newest _COMMITTED-sealed ``pattern`` dir under `root` (and its
-    numeric id; (None, -1) when there is none)."""
-    import glob
-
-    best, best_id = None, -1
-    for d in glob.glob(os.path.join(root, pattern)):
-        if not os.path.isfile(os.path.join(d, "_COMMITTED")):
-            continue
-        i = _dir_id(d)
-        if i > best_id:
-            best, best_id = d, i
-    return best, best_id
-
-
-def _committed_batch_stores(span_dir: str, out_dir: str) -> "list[str]":
-    """Span-store batch dirs whose OWNING docs dir is committed (an
-    orphan store from a crash between the two writes must never join a
-    novelty check — it would mark the replay's own spans as seen)."""
-    import glob
-
-    return sorted(
-        (d for d in glob.glob(os.path.join(span_dir, "batch=*"))
-         if os.path.isfile(os.path.join(
-             out_dir, os.path.basename(d), "_COMMITTED"))),
-        key=_dir_id)
-
-
-def _compact_store(spark, store_dir: str, owner_dir: str, snap,
-                   snap_b: int, batch_id: int, compact_every: int,
-                   fold=None) -> None:
-    """Fold the committed batch stores past the newest snapshot (plus
-    that snapshot) into a new ``compact=<batch_id>`` snapshot once
-    `compact_every` of them have accumulated — the shared bounded-state
-    compaction step of the admission loops (ADVICE r7).  Crash-safe:
-    the snapshot's own ``_COMMITTED`` marker is written strictly AFTER
-    its parquet write returns, an uncommitted snapshot is ignored by
-    every reader, and a batch store is deleted only once a COMMITTED
-    snapshot covers its contents, so no state is ever lost.  `fold`
-    post-processes the unioned frame (e.g. distinct hashes for the
-    span store; identity for signature stores whose ids are disjoint
-    across batches).
-
-    GC (ADVICE r8): once the new snapshot's marker lands, the
-    superseded snapshots and the batch stores it covers are dead to
-    every reader (readers = newest committed snapshot + NEWER batch
-    stores), so they are deleted — without this the store's disk
-    footprint and cumulative write volume grow O(B²/compact_every)
-    over a long-running stream, the same asymptotics compaction was
-    added to fix, shifted from reads to writes/disk.  Deletion runs
-    strictly AFTER the marker, and every call FIRST sweeps strandlings
-    from a crash inside a previous GC (snapshots older than the newest
-    committed one; batch stores its id already covers — review r9:
-    without the sweep a mid-GC crash leaked them permanently, since
-    later calls only looked at stores newer than their own snapshot).
-    Orphan batch stores NEWER than the snapshot (owner dir
-    uncommitted) are NOT covered and never deleted here."""
-    import glob
-    import shutil
-
-    if snap is not None:
-        # sweep strandlings dead to every reader: a crash between a
-        # previous snapshot's marker and its GC loops leaves covered
-        # dirs behind that no later `newer` list revisits
-        for d in glob.glob(os.path.join(store_dir, "compact=*")):
-            if _dir_id(d) < snap_b:
-                shutil.rmtree(d, ignore_errors=True)
-        for d in glob.glob(os.path.join(store_dir, "batch=*")):
-            if _dir_id(d) <= snap_b:
-                shutil.rmtree(d, ignore_errors=True)
-    newer = [d for d in _committed_batch_stores(store_dir, owner_dir)
-             if _dir_id(d) > snap_b]
-    if len(newer) < compact_every:
-        return
-    cdir = os.path.join(store_dir, f"compact={batch_id}")
-    src = ([snap] if snap is not None else []) + newer
-    df = spark.read.parquet(*src)
-    if fold is not None:
-        df = fold(df)
-    df.write.mode("overwrite").parquet(cdir)
-    with open(os.path.join(cdir, "_COMMITTED"), "w"):
-        pass
-    for d in glob.glob(os.path.join(store_dir, "compact=*")):
-        if _dir_id(d) < batch_id:
-            shutil.rmtree(d, ignore_errors=True)
-    for d in newer:
-        shutil.rmtree(d, ignore_errors=True)
+    _committed_batch_loop(stream_docs, work_dir, "scored", step)
 
 
 def run_streaming_paragraph_admission(stream_docs: DataFrame,
@@ -1634,29 +1473,19 @@ def run_streaming_paragraph_admission(stream_docs: DataFrame,
     crawl-ingest pass that strips cross-batch boilerplate and repeated
     passages WITHOUT rejecting whole documents.
 
-    Same durability discipline as the MinHash admission loop
-    (`run_streaming_minhash_admission`): per-batch output dirs sealed
-    by a framework-owned ``_COMMITTED`` marker written strictly after
-    both writes return; replays skip committed batches, and only span
-    stores whose docs dir is committed join the novelty check (an
-    orphan store from a crash between the two writes would otherwise
-    mark this replay's own spans as seen and empty the batch).
-
     State is the span store: one md5-derived 60-bit hash per distinct
     admitted span (never span text) — O(distinct spans) longs on disk,
     read per batch; at scale a bucketed table on the hash.  To keep the
     per-batch novelty-check read bounded over a long-running stream
     (reading every per-batch store is O(B²) cumulative I/O — ADVICE
     r7), every `compact_every` committed batches the stores are folded
-    into a consolidated ``{span_dir}/compact=B`` snapshot (distinct
-    hashes of everything ≤ batch B, sealed by its own ``_COMMITTED``
-    marker written strictly after the write); subsequent batches read
-    the newest committed snapshot plus only the batch stores after it,
-    so steady-state read cost is O(|store| + compact_every · batch).
-    Old batch stores are left in place — replay reads never miss state,
-    an uncommitted snapshot is ignored, and a committed snapshot plus
-    the per-batch stores it covers only makes `seen` redundantly
-    distinct, never wrong.  Hash-keyed
+    into a consolidated ``{work_dir}/spans/compact=B`` snapshot
+    (distinct hashes of everything ≤ batch B) and the batch stores it
+    covers are deleted (ADVICE r8); later batches read the newest
+    committed snapshot plus only the batch stores after it, so
+    steady-state read cost is O(|store| + compact_every · batch).  The
+    commit, replay and compaction protocol is
+    :func:`_committed_batch_loop`'s.  Hash-keyed
     novelty means a 60-bit collision strips a genuinely novel span
     (P ≈ n²/2⁶¹: ~4·10⁻⁷ even at a billion distinct spans, ~0.4
     expected strips at 10¹² — the store stays hashes because span TEXT
@@ -1667,43 +1496,22 @@ def run_streaming_paragraph_admission(stream_docs: DataFrame,
     """
     from ..functions.corpus import reassemble_spans
 
-    out_dir = os.path.join(work_dir, "cleaned")
-    span_dir = os.path.join(work_dir, "spans")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bdir = os.path.join(out_dir, f"batch={batch_id}")
-        if os.path.isfile(os.path.join(bdir, "_COMMITTED")):
-            return  # replayed batch: already committed
+    def step(batch_df: DataFrame, store, pin):
         # NO span-count early exit: a batch of only blank/span-less
         # documents must still emit every document with ('', 0, 0) —
-        # the reassembly's id restore below handles empty `units`
+        # the reassembly's id restore below handles empty spans
         # uniformly (dropping the docs would break the "every document
         # is emitted" contract and batch-operator parity).
-        units, marked, snap, snap_b = _mark_spans(
+        marked = _mark_spans(
             batch_df.select(F.col(id_col).alias("id"),
                             F.col(text_col).alias("__text")),
-            span_dir, out_dir, unit_tokens)
+            store, unit_tokens, pin)
         # shared reassembly + span-less-id restore: ONE helper with the
         # batch operator, whose SQL is this loop's correctness oracle
         cleaned = reassemble_spans(
             marked, batch_df.select(F.col(id_col).alias("id")),
             id_col="id")
-        novel = marked.filter("__keep").select("h").distinct()
-        # spans first, docs last, marker after both (crash anywhere
-        # before the marker replays into an overwrite, never a loss)
-        novel.write.mode("overwrite").parquet(
-            os.path.join(span_dir, f"batch={batch_id}"))
-        cleaned.write.mode("overwrite").parquet(bdir)
-        with open(os.path.join(bdir, "_COMMITTED"), "w"):
-            pass
-        marked.unpersist()
-        units.unpersist()
-        _compact_store(spark, span_dir, out_dir, snap, snap_b, batch_id,
-                       compact_every,
-                       fold=lambda df: df.select("h").distinct())
+        return cleaned, marked.filter("__keep").select("h").distinct()
 
-    q = (stream_docs.writeStream.foreachBatch(process)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _committed_batch_loop(stream_docs, work_dir, "cleaned", step,
+                          store_name="spans", compact_every=compact_every)

@@ -230,6 +230,39 @@ def test_grouped_skyline_null_group_keys(spark):
         assert {r.id for r in got.collect()} == {1, 2, 4}, strategy
 
 
+@pytest.mark.parametrize("strategy,salt", [("window", None),
+                                           ("kernel", None), ("kernel", 4)])
+def test_grouped_skyline_adversarial_matches_brute_force(spark, strategy,
+                                                         salt):
+    """Every grouped strategy equals a brute-force per-group skyline on
+    NULL and NaN dims (dropped first), ±inf, ties, exact duplicates and
+    one skewed group holding most rows."""
+    inf, nan = float("inf"), float("nan")
+    rows = [("big", i, float(i % 40), float(40 - i % 40) + (i % 3))
+            for i in range(240)]                       # skewed, duplicated
+    rows += [("big", 1000, -inf, 60.0), ("big", 1001, 50.0, -inf),
+             ("big", 1002, None, 0.0), ("big", 1003, nan, -5.0),
+             ("t", 2000, 1.0, 1.0), ("t", 2001, 1.0, 1.0),   # duplicates
+             ("t", 2002, 1.0, 2.0), ("t", 2003, 0.0, inf),   # ties on d0
+             ("t", 2004, inf, 0.0), ("t", 2005, 2.0, nan),
+             ("n", 3000, None, None), ("n", 3001, inf, inf)]
+    df = spark.createDataFrame(rows, "grp string, id long, d0 double, "
+                                     "d1 double")
+
+    def dominates(a, b):
+        return a[0] <= b[0] and a[1] <= b[1] and a != b
+
+    complete = [r for r in rows
+                if all(v is not None and v == v for v in r[2:])]
+    want = {r[1] for r in complete
+            if not any(q[0] == r[0] and dominates(q[2:], r[2:])
+                       for q in complete)}
+    got = grouped_skyline(df, ["d0", "d1"], by="grp", strategy=strategy,
+                          salt=salt)
+    assert {r.id for r in got.collect()} == want
+    assert {1000, 1001, 2000, 2001, 2003, 2004, 3001} <= want
+
+
 def test_skyline_auto_both_branches(lineitem, oracle_2d):
     from flink_skyline_qos_spark.operators.skyline import skyline_auto
 

@@ -1084,45 +1084,12 @@ def test_streaming_minhash_admission_end_to_end(spark, tmp_path):
                    spark.read.parquet(f"{work}/admitted/*").collect())
     assert again == [1, 3, 11]
 
-    # crash replay: a crash between the sigs write and the docs commit
-    # marker leaves an ORPHAN sigs/batch=1 with no admitted/batch=1.
-    # The replay must not cross-check batch 1's survivors against their
-    # own orphaned signatures (self-match would drop doc 11 forever).
-    shutil.rmtree(f"{work}/admitted/batch=1")
-    shutil.rmtree(f"{work}/ckpt")
-    run_streaming_minhash_admission(docs_stream(), work, threshold=0.5)
-    after_crash = sorted(r.doc_id for r in
-                         spark.read.parquet(f"{work}/admitted/*").collect())
-    assert after_crash == [1, 3, 11]
-    sigs2 = spark.read.parquet(f"{work}/sigs/*")
-    assert sorted(r.doc_id for r in sigs2.collect()) == [1, 3, 11]
-
-    # mid-write crash: the docs dir exists but the commit marker was
-    # never written (Spark creates the dir when the write job STARTS)
-    # and the output is truncated.  The replay gate must key on the
-    # framework-owned _COMMITTED marker, not directory existence — a
-    # bare isdir check would skip the batch as committed and the
-    # truncated output would stand (VERDICT r5 #2).  The marker is
-    # ours, not Hadoop's _SUCCESS, so the gate survives
-    # mapreduce.fileoutputcommitter.marksuccessfuljobs=false
-    # (ADVICE r6).
-    bdir = f"{work}/admitted/batch=1"
-    _os.remove(f"{bdir}/_COMMITTED")
-    for part in [f for f in _os.listdir(bdir) if f.startswith("part-")]:
-        _os.remove(f"{bdir}/{part}")  # simulate the truncation
-    shutil.rmtree(f"{work}/ckpt")
-    run_streaming_minhash_admission(docs_stream(), work, threshold=0.5)
-    assert _os.path.isfile(f"{bdir}/_COMMITTED")  # re-processed + committed
-    after_trunc = sorted(r.doc_id for r in
-                         spark.read.parquet(f"{work}/admitted/*").collect())
-    assert after_trunc == [1, 3, 11]
-
 
 def test_streaming_paragraph_admission_end_to_end(spark, tmp_path):
     """Span-level streaming admission: spans deduplicate within a
     batch (first occurrence by (id, pos)), across batches (standing
     span store), documents are always emitted with surviving spans
-    reassembled; replay and orphan-store crashes admit nothing twice."""
+    reassembled; a full replay admits nothing twice."""
     from flink_skyline_qos_spark.streaming.continuous import (
         run_streaming_paragraph_admission,
     )
@@ -1172,16 +1139,6 @@ def test_streaming_paragraph_admission_end_to_end(spark, tmp_path):
              for r in spark.read.parquet(f"{work}/cleaned/*").collect()}
     assert again[10] == "d1 d2 d3 d4"
     assert spark.read.parquet(f"{work}/spans/*").distinct().count() == 4
-
-    # orphan-store crash: spans/batch=1 exists but cleaned/batch=1 was
-    # never committed — the replay must NOT treat batch 1's own spans
-    # as already seen (that would empty doc 10 forever)
-    shutil.rmtree(f"{work}/cleaned/batch=1")
-    shutil.rmtree(f"{work}/ckpt")
-    run_streaming_paragraph_admission(docs_stream(), work, unit_tokens=4)
-    after = {r.id: r.clean_text
-             for r in spark.read.parquet(f"{work}/cleaned/*").collect()}
-    assert after[10] == "d1 d2 d3 d4"
 
 
 def test_streaming_paragraph_admission_all_blank_batch(spark, tmp_path):
@@ -1636,90 +1593,225 @@ def test_embedding_admission_empty_and_zero_admit_batches(spark, tmp_path):
     assert [r.id for r in snap.select("id").collect()] == [1]
 
 
-def test_compact_store_sweeps_strandlings_from_crashed_gc(spark, tmp_path):
-    """Review r9: a crash between a snapshot's marker and its GC loops
-    strands covered batch stores; the NEXT _compact_store call must
-    sweep anything the newest committed snapshot already covers."""
-    import os as _os
+# ------------------------------------------- the committed-batch loop
+#
+# One table drives every admission loop through the same fixtures:
+# (runner name, extra kwargs, output dir, store dir or None, id column
+# of the output).  compact_every=2 makes batch 1 of a two-batch stream
+# fold the store into a snapshot and GC it, so the crash points below
+# reach every step of the protocol.
 
-    from flink_skyline_qos_spark.streaming.continuous import (
-        _compact_store, _latest_committed,
-    )
-
-    store = tmp_path / "store"
-    owner = tmp_path / "owner"
-    for b in (0, 1):
-        sdir = store / f"batch={b}"
-        odir = owner / f"batch={b}"
-        spark.createDataFrame([(b,)], "h long").write.mode(
-            "overwrite").parquet(str(sdir))
-        odir.mkdir(parents=True)
-        (odir / "_COMMITTED").touch()
-    # simulate: snapshot compact=1 committed, but its GC crashed —
-    # covered batch stores 0 and 1 still on disk
-    spark.read.parquet(str(store / "batch=0"), str(store / "batch=1")) \
-        .write.mode("overwrite").parquet(str(store / "compact=1"))
-    (store / "compact=1" / "_COMMITTED").touch()
-    snap, snap_b = _latest_committed(str(store), "compact=*")
-    assert snap_b == 1
-    # next batch (2) commits and calls _compact_store below cadence —
-    # strandlings must be swept even though no new snapshot is written
-    sdir2, odir2 = store / "batch=2", owner / "batch=2"
-    spark.createDataFrame([(2,)], "h long").write.mode(
-        "overwrite").parquet(str(sdir2))
-    odir2.mkdir(); (odir2 / "_COMMITTED").touch()
-    _compact_store(spark, str(store), str(owner), snap, snap_b,
-                   batch_id=2, compact_every=99)
-    assert not (store / "batch=0").exists()
-    assert not (store / "batch=1").exists()
-    assert (store / "batch=2").exists()       # newer than the snapshot
-    assert (store / "compact=1").exists()     # the live snapshot stays
+_RELAXED_C4 = dict(min_tokens=5, max_tokens=1000, tok_len_band=(0.0, 100.0),
+                   max_repeat=1.0, min_stopword=0.0)
+_LOOPS = {
+    "minhash": ("run_streaming_minhash_admission",
+                dict(threshold=0.5, compact_every=2), "admitted", "sigs",
+                "doc_id"),
+    "substring": ("run_streaming_substring_admission",
+                  dict(k=8, min_span=12, max_df=50, compact_every=2),
+                  "admitted",
+                  "shingles", "doc_id"),
+    "embedding": ("run_streaming_embedding_admission",
+                  dict(threshold=0.8, n_planes=16, bands=4,
+                       compact_every=2), "admitted", "sigs", "vec_id"),
+    "paragraph": ("run_streaming_paragraph_admission",
+                  dict(unit_tokens=4, compact_every=2), "cleaned", "spans",
+                  "id"),
+    "ingest": ("run_streaming_ingest_pipeline",
+               dict(unit_tokens=4, compact_every=2, **_RELAXED_C4),
+               "cleaned", "spans", "id"),
+    "c4": ("run_streaming_c4_admission", {}, "scored", None, "doc_id"),
+}
+_TEXT_A = "the quick brown fox jumps over the lazy dog " * 8
+_TEXT_B = "pack my box with five dozen liquor jugs today " * 8
+_TEXT_C = "sphinx of black quartz judge my vow tonight ok " * 8
 
 
-def test_minhash_admission_empty_first_batch_store_schema(spark, tmp_path):
-    """Review r9 pass 2: an EMPTY first batch's committed sig store must
-    carry the same column names as non-empty stores (id_col, not a
-    literal 'id') — the next batch's cross-check reads all committed
-    stores with one schema, and the mismatch killed the stream with an
-    unresolved-column error."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import time as _time
+def _vec(seed):
+    import numpy as np
 
-    from flink_skyline_qos_spark.streaming.continuous import (
-        run_streaming_minhash_admission,
-    )
+    return np.random.RandomState(seed).standard_normal(16)
 
-    base = ("the quick brown fox jumps over the lazy dog and then "
-            "runs far away into the deep dark woods tonight")
-    schema = "doc_id long, text string"
-    b0 = spark.createDataFrame([], schema)             # EMPTY first batch
-    b1 = spark.createDataFrame([(1, base)], schema)
-    b2 = spark.createDataFrame([(10, base + " extra")], schema)
-    data_dir = tmp_path / "docs"
-    data_dir.mkdir()
-    now = _time.time()
-    for i, part in enumerate((b0, b1, b2)):
-        tmpd = str(tmp_path / f"tmp{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmpd)
-        dst = str(data_dir / f"part-{i}.parquet")
-        _shutil.move(_glob.glob(f"{tmpd}/part-*.parquet")[0], dst)
-        _os.utime(dst, (now - 20 + 10 * i,) * 2)
+
+def _batch_rows(loop, ids):
+    """Rows of one micro-batch: id 1 is text A / vector a, id 10 its
+    exact duplicate, 2 a near-duplicate of 1 and 12 of 11."""
+    import json
+
+    if loop == "embedding":
+        near = {2: 1, 10: 1, 12: 11}
+        return [json.dumps({"vec_id": i, "embedding": [
+            float(x) for x in _vec(near.get(i, i))
+            + (0.01 * _vec(100 + i) if i in near else 0)]}) for i in ids]
+    text = {1: _TEXT_A, 2: _TEXT_A, 3: _TEXT_B, 10: _TEXT_A,
+            11: _TEXT_C, 12: _TEXT_C}
+    return [json.dumps({"doc_id": i, "text": text[i]}) for i in ids]
+
+
+def _write_batches(loop, data_dir, batches):
+    """One JSON file per micro-batch, mtime-staggered so the file source
+    replays them in order."""
+    import time
+
+    os.makedirs(data_dir)
+    now = time.time()
+    for i, ids in enumerate(batches):
+        p = os.path.join(data_dir, f"{i}.json")
+        with open(p, "w") as f:
+            f.write("".join(r + "\n" for r in _batch_rows(loop, ids)))
+        os.utime(p, (now - 100 + 10 * i,) * 2)
+
+
+def _run_loop(spark, loop, data_dir, work, **kw):
+    """Run `loop` over the batch files in `data_dir` until drained."""
+    from flink_skyline_qos_spark.streaming import continuous
+
+    name, extra, *_ = _LOOPS[loop]
+    schema = ("vec_id long, embedding array<float>" if loop == "embedding"
+              else "doc_id long, text string")
     stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(data_dir)))
+              .option("maxFilesPerTrigger", 1).json(data_dir))
+    getattr(continuous, name)(stream, work, **{**extra, **kw})
+
+
+def _loop_state(spark, loop, work):
+    """Everything a run leaves behind: output rows, committed batches,
+    store directory names and store rows."""
+    import glob
+
+    _, _, out, store, _ = _LOOPS[loop]
+
+    def rows(path):
+        return sorted(repr(tuple(r)) for r in spark.read
+                      .option("recursiveFileLookup", "true")
+                      .parquet(path).collect())
+
+    state = {"out": rows(f"{work}/{out}"),
+             "committed": sorted(os.path.relpath(p, work) for p in
+                                 glob.glob(f"{work}/{out}/*/_COMMITTED"))}
+    if store is not None:
+        state["store_dirs"] = sorted(os.listdir(f"{work}/{store}"))
+        state["store"] = rows(f"{work}/{store}")
+    return state
+
+
+def _settled_pins(spark, expect=None, timeout=10.0):
+    """Persistent-RDD count once released pins have drained: polled
+    until it reaches `expect`, or without one until it stops changing.
+    Counted in place: a getPersistentRDDs() copy would itself hold
+    pins."""
+    import gc
+    import time
+
+    deadline, prev = time.time() + timeout, None
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        n = spark.sparkContext._jsc.sc().persistentRdds().size()
+        done = n <= expect if expect is not None else n == prev
+        if done or time.time() > deadline:
+            return n
+        prev = n
+        time.sleep(0.5)
+
+
+_CRASHES = [(loop, point) for loop in _LOOPS
+            for point in ("store", "output", "gc")
+            if _LOOPS[loop][3] is not None or point == "output"]
+
+
+@pytest.fixture(scope="module")
+def clean_loop_states():
+    """Each loop's state after a crash-free run, shared by its points."""
+    return {}
+
+
+@pytest.mark.parametrize("loop,point", _CRASHES,
+                         ids=[f"{a}-{b}" for a, b in _CRASHES])
+def test_committed_batch_loop_crash_replay(spark, tmp_path, monkeypatch,
+                                           clean_loop_states, loop, point):
+    """Fault injection at every crash point of the commit protocol,
+    for every admission loop: a batch-1 failure after the store write
+    (orphan store), after the output write but before the marker
+    (truncated output), and after a snapshot's marker but before its
+    GC.  The error propagates, a failed write leaves no pin behind,
+    and a restart on the same checkpoint ends in exactly the clean
+    run's output and store."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    _, _, out, store, _ = _LOOPS[loop]
+    batches = [(1, 2, 3), (10, 11, 12)]
+    data_dir = str(tmp_path / "data")
+    _write_batches(loop, data_dir, batches)
+    if loop not in clean_loop_states:
+        clean = str(tmp_path / "clean")
+        _run_loop(spark, loop, data_dir, clean)
+        clean_loop_states[loop] = _loop_state(spark, loop, clean)
+    work = str(tmp_path / "work")
+    target = os.path.join(work, out, "batch=1")
+    real_parquet, real_rmtree = DataFrameWriter.parquet, shutil.rmtree
+
+    def faulty_parquet(self, path, *a, **kw):
+        if path == target:
+            if point == "output":
+                real_parquet(self, path, *a, **kw)
+                for f in os.listdir(path):
+                    if f.startswith("part-"):
+                        os.remove(os.path.join(path, f))
+            raise OSError("injected fault")
+        return real_parquet(self, path, *a, **kw)
+
+    def faulty_rmtree(path, *a, **kw):
+        if str(path).startswith(os.path.join(work, str(store))):
+            raise OSError("injected fault")
+        return real_rmtree(path, *a, **kw)
+
+    base = _settled_pins(spark)
+    with monkeypatch.context() as m:
+        if point == "gc":
+            m.setattr(shutil, "rmtree", faulty_rmtree)
+        else:
+            m.setattr(DataFrameWriter, "parquet", faulty_parquet)
+        with pytest.raises(Exception, match="injected fault"):
+            _run_loop(spark, loop, data_dir, work)
+    assert _settled_pins(spark, base) <= base
+    # only the GC crash comes after batch 1's commit
+    assert os.path.isfile(os.path.join(target, "_COMMITTED")) == \
+        (point == "gc")
+    _run_loop(spark, loop, data_dir, work)
+    assert _loop_state(spark, loop, work) == clean_loop_states[loop]
+
+
+@pytest.mark.parametrize("loop", [k for k, v in _LOOPS.items() if v[3]])
+def test_admission_empty_first_batch_store_schema(spark, tmp_path, loop):
+    """Review r9 pass 2: an EMPTY first batch commits a store with the
+    columns and types of a non-empty batch's, so the next batch's
+    cross-check reads every committed store with one schema (a
+    hand-typed empty-store schema once killed the stream with an
+    unresolved-column error).  Batch 2 repeats batch 1's document and
+    is rejected, or stripped to nothing, through the store."""
+    import glob
+
+    _, _, out, store, id_col = _LOOPS[loop]
+    data_dir = str(tmp_path / "data")
+    _write_batches(loop, data_dir, [(), (1,), (10,)])
     work = str(tmp_path / "work")
     # compact_every high: batch 2's cross-check reads the RAW batch=0
     # (empty) and batch=1 stores together — the schema-mismatch path
-    run_streaming_minhash_admission(stream, work, threshold=0.5,
-                                    compact_every=99)
-    admitted = sorted(r.doc_id for r in spark.read
-                      .option("recursiveFileLookup", "true")
-                      .parquet(f"{work}/admitted").collect())
-    assert admitted == [1]  # 10 rejected via the standing store
-    s0 = spark.read.parquet(f"{work}/sigs/batch=0")
-    s1 = spark.read.parquet(f"{work}/sigs/batch=1")
-    assert s0.columns == s1.columns == ["doc_id", "sig"]
+    _run_loop(spark, loop, data_dir, work, compact_every=99)
+    assert len(glob.glob(f"{work}/{out}/batch=*/_COMMITTED")) == 3
+    s0 = spark.read.parquet(f"{work}/{store}/batch=0")
+    s1 = spark.read.parquet(f"{work}/{store}/batch=1")
+    assert s0.count() == 0 and s0.dtypes == s1.dtypes
+    got = {r[id_col]: r for r in spark.read
+           .option("recursiveFileLookup", "true")
+           .parquet(f"{work}/{out}").collect()}
+    if out == "admitted":
+        assert sorted(got) == [1]
+    else:
+        assert got[1].clean_text and got[10].clean_text == ""
 
 
 def test_streaming_substring_admission_end_to_end(spark, tmp_path):
